@@ -207,8 +207,8 @@ object Bench {
       try {
         // collect(), NOT count() (r12): under count() Catalyst prunes
         // unreferenced output columns and with them entire operator
-        // pipelines — a registry-wide audit (Scratch prunescan) found
-        // 19 queries whose count plan kept ZERO work nodes (joins /
+        // pipelines — a registry-wide audit of count vs collect plans
+        // found 19 queries whose count plan kept ZERO work nodes (joins /
         // generators / windows / aggregates) while their full plan
         // carried up to 14: the minhash/simhash verdict queries, the
         // surprisal/importance scorers and the span masker all

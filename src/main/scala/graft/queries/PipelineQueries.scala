@@ -95,11 +95,10 @@ object PipelineQueries {
   private val processedDirByJvm = new graft.sources.JvmMemo[String]
   private def processedMaterialized(s: SparkSession): DataFrame = {
     val dir = processedDirByJvm.getOrElseCompute("processed") {
-      val d = Files.createTempDirectory("graft_processed_").toString
       // process-owned fresh dir → reclaim at JVM exit, or every run
-      // leaks one copy into the tmpdir (the ADVICE r4 AvroIOSpec
-      // pattern; observed 20 accumulated dirs in r6)
-      sys.addShutdownHook(deleteRec(Paths.get(d)))
+      // leaks one copy into the tmpdir (observed 20 accumulated dirs
+      // in r6)
+      val d = callTempDir("graft_processed_").toString
       OrderPipeline.processOrders(corruptOrdersMaterialized(s), "graft_materialize")
         .write.mode("overwrite").parquet(d)
       d
@@ -409,12 +408,21 @@ object PipelineQueries {
 
   private def deleteRec(p: Path): Unit = graft.sources.AtomicCache.deleteRec(p)
 
+  /** A fresh directory per call, unique to this process and reclaimed
+    * at JVM exit: a fixed shared path would let two JVMs — or a second
+    * call before the first result is read — delete each other's files
+    * (the returned DataFrames read their directory lazily). */
+  private def callTempDir(prefix: String): Path = {
+    val root = Files.createTempDirectory(prefix)
+    sys.addShutdownHook(deleteRec(root))
+    root
+  }
+
   private val q35 = GraftQuery(
     "q35_jsonl_roundtrip",
     (s, _) => {
-      val root = Paths.get(sys.props("java.io.tmpdir"), "graft_q35")
+      val root = callTempDir("graft_q35_")
       val rawDir = root.resolve("raw"); val procDir = root.resolve("processed")
-      deleteRec(root)
       val raw = corruptOrdersMaterialized(s)
       val ts = to_timestamp(col("order_date"))
       raw
@@ -487,10 +495,9 @@ object PipelineQueries {
   private val q37 = GraftQuery(
     "q37_stream_pipeline",
     (s, _) => {
-      val root = Paths.get(sys.props("java.io.tmpdir"), "graft_q37")
+      val root = callTempDir("graft_q37_")
       val rawDir = root.resolve("raw"); val outDir = root.resolve("out")
       val ckpt = root.resolve("ckpt")
-      deleteRec(root)
       corruptOrdersMaterialized(s).repartition(3)
         .write.mode("overwrite").json(rawDir.toString)
       OrderStream.runAvailableNow(s, rawDir.toString, outDir.toString,
